@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -14,14 +13,10 @@ object Bench {
     val wallStart = System.nanoTime()
     def elapsedWall: Double = (System.nanoTime() - wallStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[32] unless SPARK_GRAFT_CPUS says otherwise: the frozen timing
+    // protocol BASELINE.md records
+    val cpus = LocalSession.envCpus(fallback = 32)
+    val spark = LocalSession.build(cpus)
     // ERROR, not WARN: the bounded single-partition windows (top-V vocab,
     // distinct-score histograms, …) are scale-safe by design but Spark
     // emits a "WindowExec: No Partition Defined" WARN per execution —
@@ -134,7 +129,7 @@ object Bench {
     def probeOnce(): Double = {
       System.gc()
       val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("sum(id * 3 % 7)").collect()
       (System.nanoTime() - t0) / 1e9
     }

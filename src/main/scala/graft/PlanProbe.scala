@@ -12,10 +12,7 @@ package graft
   * Usage: runMain graft.PlanProbe <queryName> <sfDir> [sfDir...] */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.ui.enabled","false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = LocalSession.build()
     for (d <- args.drop(1)) {
       val df = SparkEntry.queries(args(0))(s, d)
       df.write.format("noop").mode("overwrite").save()

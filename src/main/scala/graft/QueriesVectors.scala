@@ -2236,7 +2236,7 @@ private[graft] object QueriesVectors {
     * indexed corpus via [[adaptiveTowerBits]] (the d73 self-tuning
     * move) and add a per-bucket posting cap (the Dedup.docShingles
     * hot-key move). Identical vectors share any width, so aligned
-    * pairs always stay candidates. XModalBench measures the knob. */
+    * pairs always stay candidates. */
   private[graft] def towerBucket(vec: Column, bits: Int = 6): Column =
     (0 until bits).map(b =>
       when(element_at(vec, b + 1) > 128L, lit(1L << b)).otherwise(lit(0L)))
@@ -2264,8 +2264,8 @@ private[graft] object QueriesVectors {
     * ⌈log₂ m⌉ of the same integer m). One cheap count() derives it —
     * the d73 one-scalar-pull precedent. 500 docs → 6 bits (the r15
     * registered width, so graded-scale results are unchanged); 50k
-    * docs → 12 bits, the width XModalBench measured at 59× fewer
-    * candidates / 6.3× faster. */
+    * docs → 12 bits, the width measured at 59× fewer candidates /
+    * 6.3× faster (bench_xmodal_r15.json). */
   private[graft] def adaptiveTowerBits(n: Long): Int = {
     // ceil(n / target) in the overflow-free (n-1)/t + 1 form: counts up
     // to Long.MaxValue clamp to 16 instead of wrapping negative
@@ -2321,10 +2321,6 @@ private[graft] object QueriesVectors {
       .withColumn("in2", towerNorm2(col("ivec")))
   }
 
-  private[graft] def imageTower(docsDf: DataFrame,
-                                bucketBits: Int = 6): DataFrame =
-    imageTowerFromDims(towerDims(docsDf), bucketBits)
-
   /** Text tower over a dims frame: (txt_id, tvec, tbucket, tn2) with NO
     * codec — a stateless per-row map, so it runs unchanged on a
     * document STREAM (the s22 serving shape). */
@@ -2334,10 +2330,6 @@ private[graft] object QueriesVectors {
       .select(col("doc_id").as("txt_id"), col("tvec"))
       .withColumn("tbucket", towerBucket(col("tvec"), bucketBits))
       .withColumn("tn2", towerNorm2(col("tvec")))
-
-  private[graft] def textTower(docsDf: DataFrame,
-                               bucketBits: Int = 6): DataFrame =
-    textTowerFromDims(towerDims(docsDf), bucketBits)
 
   /** Scored candidate pairs — the shared core of the curation report
     * (c05/s22), the retrieval eval (c07) and the cross-modal dedup
@@ -2349,25 +2341,19 @@ private[graft] object QueriesVectors {
     * partners, which is exactly the Dedup.docShingles drop-the-key
     * semantics. `textDims` may come from a STREAMING frame. */
   private[graft] def crossModalScoredDims(
-      textDims: DataFrame, imgDims: DataFrame, bucketBits: Int,
-      maxPostings: Long = TOWER_MAX_POSTINGS): DataFrame = {
-    val img0 = imageTowerFromDims(imgDims, bucketBits)
-    val imgOk =
-      if (maxPostings <= 0L) img0
-      else {
-        // the hot-bucket cap consumes the tower TWICE — once under the
-        // depth histogram, once as the join's index side — and nothing
-        // between them is an exchange, so the codec mapPartitions pass
-        // re-executed per consumer (measured r18: two full tower builds
-        // inside every scored materialization). The image side is always
-        // the STATIC index (only textDims may stream — s22), so an eager
-        // weak-ref checkpoint materializes the codec once (the s25
-        // corpusTower idiom); tiny: n_img rows × (16 longs + ids).
-        val img = img0.localCheckpoint(true)
-        val hot = img.groupBy(col("ibucket")).count()
-          .filter(col("count") > maxPostings).select(col("ibucket"))
-        img.join(hot, Seq("ibucket"), "left_anti")
-      }
+      textDims: DataFrame, imgDims: DataFrame, bucketBits: Int): DataFrame = {
+    // the hot-bucket cap consumes the tower TWICE — once under the
+    // depth histogram, once as the join's index side — and nothing
+    // between them is an exchange, so the codec mapPartitions pass
+    // re-executed per consumer (measured r18: two full tower builds
+    // inside every scored materialization). The image side is always
+    // the STATIC index (only textDims may stream — s22), so an eager
+    // weak-ref checkpoint materializes the codec once (the s25
+    // corpusTower idiom); tiny: n_img rows × (16 longs + ids).
+    val img = imageTowerFromDims(imgDims, bucketBits).localCheckpoint(true)
+    val hot = img.groupBy(col("ibucket")).count()
+      .filter(col("count") > TOWER_MAX_POSTINGS).select(col("ibucket"))
+    val imgOk = img.join(hot, Seq("ibucket"), "left_anti")
     val pairs = textTowerFromDims(textDims, bucketBits)
       .join(imgOk, col("tbucket") === col("ibucket"))
     val dot = graft.functions.CenteredDotLong(col("ivec"), col("tvec"), 128L)
@@ -2379,25 +2365,19 @@ private[graft] object QueriesVectors {
       .withColumnRenamed("in2", "_in2").withColumnRenamed("tn2", "_tn2")
   }
 
-  private[graft] def crossModalScored(
-      textDocs: DataFrame, imgDocs: DataFrame, bucketBits: Int,
-      maxPostings: Long = TOWER_MAX_POSTINGS): DataFrame =
-    crossModalScoredDims(towerDims(textDocs), towerDims(imgDocs),
-      bucketBits, maxPostings)
-
   /** Adaptive-width entry point — the registered c05/s22 behavior: ONE
     * cheap count of the indexed image corpus picks the bucket width
     * ([[adaptiveTowerBits]]); works when `textDocs` streams because the
     * image side is the static index. */
   private[graft] def crossModalScored(textDocs: DataFrame,
                                       imgDocs: DataFrame): DataFrame =
-    crossModalScored(textDocs, imgDocs, adaptiveTowerBits(imgDocs.count()))
+    crossModalScoredDims(towerDims(textDocs), towerDims(imgDocs),
+      adaptiveTowerBits(imgDocs.count()))
 
-  private[graft] def crossModalReport(
-      textDocs: DataFrame, imgDocs: DataFrame, bucketBits: Int,
-      maxPostings: Long = TOWER_MAX_POSTINGS): DataFrame = {
+  private[graft] def crossModalReport(textDocs: DataFrame,
+                                      imgDocs: DataFrame): DataFrame = {
     val score = col("_score")
-    crossModalScored(textDocs, imgDocs, bucketBits, maxPostings)
+    crossModalScored(textDocs, imgDocs)
       .withColumn("_kept", (score >= 0.8).cast("long"))
       .withColumn("_aligned", (col("doc_id") === col("txt_id")).cast("long"))
       .groupBy(col("source")).agg(
@@ -2408,10 +2388,6 @@ private[graft] object QueriesVectors {
       .withColumn("kept_rate", round(
         col("n_kept").cast("double") / col("n_pairs").cast("double"), 6))
   }
-
-  private[graft] def crossModalReport(textDocs: DataFrame,
-                                      imgDocs: DataFrame): DataFrame =
-    crossModalReport(textDocs, imgDocs, adaptiveTowerBits(imgDocs.count()))
 
   /** The tower-candidate CTE chain ending at `p` (scored pairs),
     * shared by c05/s22/c07/c08 — adaptive width (`bits` CTE over the
