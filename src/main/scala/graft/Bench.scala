@@ -76,36 +76,6 @@ object Bench {
     // the wall budget was 86% consumed in BENCH_r18 and nobody could say
     // where; these lines make the spend auditable per phase
     System.err.println(f"[bench] phase=warmup_done wall=$elapsedWall%.0f")
-    // SPARK_GRAFT_BENCH_COLDFIT=1: time the d95 logistic fit WITHOUT the
-    // memo, after warmup (JIT hot) but before the timed loop (memo still
-    // cold for sfDir). The memoized family rows (d95/s16/c03/d100/d101)
-    // measure warm serving; this publishes the true first-fit cost
-    // beside them so the decade table doesn't understate the family.
-    if (sys.env.get("SPARK_GRAFT_BENCH_COLDFIT").contains("1")) {
-      // snapshot persisted RDDs so the probe's localCheckpoint blocks
-      // can be dropped afterwards — an abandoned checkpoint would pin
-      // executor memory and perturb every subsequently timed query
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      try {
-        QueriesPrep.qcModelCold(spark, sfDir)
-        val cold = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (rddId, _) => before(rddId) }
-          .values.foreach(_.unpersist(true))
-        val line = String.format(java.util.Locale.ROOT,
-          """{"qc_cold_fit_sec":%.3f,"sf":"%s"}""",
-          java.lang.Double.valueOf(cold), sfDir)
-        System.err.println(line)
-        for (p <- Seq("/tmp/graft_bench_coldfit.json",
-            "bench_coldfit_last.json"))
-          try java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(p), line)
-          catch { case _: Throwable => () }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] cold fit failed: ${e.getMessage}")
-      }
-    }
     // best-of-N per query (default 2 + adaptive escalation): a single timed
     // pass conflates the query's cost with one-off JIT/codegen/GC events
     // that land on whichever query runs when they fire (round-1 profile
@@ -188,17 +158,16 @@ object Bench {
       }
       var gcDone = false
       def runOnce(): Option[Double] = {
-        // isolate queries: drop caches left by prior queries (dedup signature
-        // caches etc.) so storage-memory eviction churn can't skew timings,
-        // and collect the garbage those caches became — otherwise a query
-        // mid-run pays the GC debt of everything before it (observed 2-3x
-        // inflation on the shuffle-heavy dedup queries).
+        // isolate queries: collect the garbage prior queries left (a GC
+        // also lets the ContextCleaner drop their materialized blocks,
+        // which are weakly referenced) — otherwise a query mid-run pays
+        // the GC debt of everything before it (observed 2-3x inflation
+        // on the shuffle-heavy dedup queries).
         // r19 (verdict ask #2): the full GC runs once per QUERY, before
         // its first iteration — 675 GCs were ~15% of BENCH wall. Cross-
         // query debt is still collected at every boundary; iterations
         // 2+ carry only their own query's garbage, which can only make
         // the reported min EQUAL OR SLOWER (bias conservative).
-        spark.catalog.clearCache()
         if (!gcDone) { System.gc(); gcDone = true }
         val t0 = System.nanoTime()
         try {
@@ -266,7 +235,7 @@ object Bench {
       else s
     }
     // fixed-overhead decomposition (r14 verdict ask): at 260+ rows the
-    // per-query floor (clearCache + GC + plan/codegen + the noop sink
+    // per-query floor (GC + plan/codegen + the noop sink
     // round-trip) dominates the TOTAL, so totals "grow" with every
     // round's added rows even as per-row cost falls. Estimate the
     // floor as the median of the fastest-quartile mins — those rows do

@@ -56,7 +56,6 @@ object JobProfile {
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     for (n <- names) {
-      spark.catalog.clearCache()
       System.gc()
       org.apache.spark.graftshim.ListenerShim.drain(spark.sparkContext)
       L.reset()

@@ -281,10 +281,9 @@ private[graft] object QueriesAnalytics {
       // at sf1 3.36 → 2.63 s warm (the r18 "wrong trade at 100 TB"
       // guess did not survive the measurement the verdict asked for —
       // one narrow materialization beats two corpus scans).
-      val dev = sv.join(broadcast(med), Seq("event_type"))
+      val dev = Materialize(sv.join(broadcast(med), Seq("event_type"))
         .select(col("event_type"), col("med"),
-          abs(col("value") - col("med")).as("_dev"))
-        .localCheckpoint(true)
+          abs(col("value") - col("med")).as("_dev")))
       val mad = Quantiles.exactGroupQuantiles(dev, col("event_type"),
           col("_dev"), Seq(0.5))
         .select(col("grp").as("event_type"), col("q").as("mad"))

@@ -147,9 +147,8 @@ private[graft] object QueriesCorpus {
     // cc, nc — measured 33.8 CPU-s / 23 jobs at sf0.1 for d86, 11.6
     // CPU-s after). cc2 = Σ_sources cs and nc = Σ cs are exact integer
     // identities, so every downstream double is bit-identical.
-    val sc = toks.groupBy(col("source"), col("tk"))
-      .agg(count(lit(1)).as("cs"))
-      .localCheckpoint(true)
+    val sc = Materialize(toks.groupBy(col("source"), col("tk"))
+      .agg(count(lit(1)).as("cs")))
     val cc = sc.groupBy(col("tk")).agg(sum(col("cs")).as("cc2"))
     val ns = sc.groupBy(col("source")).agg(sum(col("cs")).as("ns"))
     val nc = sc.agg(sum(col("cs")).as("nc"))
@@ -218,9 +217,9 @@ private[graft] object QueriesCorpus {
       // counts and the final join-back) — lazily both re-ran the
       // tokenize + quality projection (15.9 CPU-s at sf0.1, 6.1 after).
       // Three narrow columns per doc, the d33 discipline.
-      val scored = docs(s, d).select(col("doc_id"), col("source"),
-        TextOps.qualityCols(col("text"), TextOps.tokens(col("text"))).last)
-        .localCheckpoint(true)
+      val scored = Materialize(docs(s, d).select(col("doc_id"),
+        col("source"),
+        TextOps.qualityCols(col("text"), TextOps.tokens(col("text"))).last))
       RankStats.groupPercentRank(scored, "source", "quality_score",
         "src_pct_rank", "src_cume_dist")
     },
@@ -248,11 +247,10 @@ private[graft] object QueriesCorpus {
         TextOps.tokens(col("text")).as("w"))
       // occurrences feed the bigram count table AND the probe join —
       // materialize once (same policy as jaccardPairs)
-      val occ = t.select(col("doc_id"),
+      val occ = Materialize(t.select(col("doc_id"),
           explode(TextOps.shingles(col("w"), 2)).as("bg"))
         .withColumn("w1", split(col("bg"), " ").getItem(0))
-        .withColumn("w2", split(col("bg"), " ").getItem(1))
-        .localCheckpoint(true)
+        .withColumn("w2", split(col("bg"), " ").getItem(1)))
       val uni = t.select(explode(col("w")).as("t1"))
         .groupBy(col("t1")).agg(count(lit(1)).as("cu"))
       val tot = uni.agg(sum(col("cu")).cast("double").as("_tu"))
@@ -319,10 +317,9 @@ private[graft] object QueriesCorpus {
       // src feeds the tercile histogram AND the final projection —
       // materialize once (the jaccardPairs policy) so the bigram-LM
       // count joins behind bigramNllDf run a single time
-      val src = bigramNllDf(s, d)
+      val src = Materialize(bigramNllDf(s, d)
         .join(docs(s, d).select(col("doc_id"), col("source")),
-          Seq("doc_id"))
-        .localCheckpoint(true)
+          Seq("doc_id")))
       val g = floor(col("mean_nll") * 100).cast("long")
       val hg = src.groupBy(col("source"), g.as("g"))
         .agg(count(lit(1)).as("c"))
@@ -378,9 +375,8 @@ private[graft] object QueriesCorpus {
       // counts + the tie window) plus the total — lazily each consumer
       // re-ran the tokenize + quality projection over the corpus
       // (18.0 CPU-s at sf0.1, 8.4 after). Two narrow columns per doc.
-      val scored = docs(s, d).select(col("doc_id"),
-        TextOps.qualityCols(col("text"), TextOps.tokens(col("text"))).last)
-        .localCheckpoint(true)
+      val scored = Materialize(docs(s, d).select(col("doc_id"),
+        TextOps.qualityCols(col("text"), TextOps.tokens(col("text"))).last))
       val ranked = RankStats.globalOrderIndex(scored, "quality_score",
         "doc_id", "global_rank")
       val tot = scored.agg(count(lit(1)).as("_n"))
@@ -662,10 +658,10 @@ private[graft] object QueriesCorpus {
   // doc-quadratic — the aggregation-level analog of d27's df-cutoff.
   private val d39: (String, QFn, Option[String]) = ("d39_source_overlap",
     (s, d) => {
-      val ss = docs(s, d).select(col("source"),
+      val ss = Materialize(docs(s, d).select(col("source"),
           explode(array_distinct(
             TextOps.shingles(TextOps.tokens(col("text")), 3))).as("sh"))
-        .distinct().localCheckpoint(true)
+        .distinct())
       val sz = ss.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
       val inter = ss.select(col("source").as("sa"), col("sh"))
         .join(ss.select(col("source").as("sb"), col("sh")), Seq("sh"))

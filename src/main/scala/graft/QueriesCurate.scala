@@ -712,12 +712,11 @@ private[graft] object QueriesCurate {
   private val c01: (String, QFn, Option[String]) = ("c01_curation_funnel",
     (s, d) => {
       val P = 1000000007L
-      val base = docs(s, d).select(col("doc_id"), col("text"),
+      val base = Materialize(docs(s, d).select(col("doc_id"), col("text"),
           size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
           TextOps.qualityCols(col("text"), TextOps.tokens(col("text"))).last,
           TextOps.fingerprint(col("text")).as("_fp"),
-          (col("doc_id") % 25 === 0).as("_eval"))
-        .localCheckpoint(true)
+          (col("doc_id") % 25 === 0).as("_eval")))
       def stage(id: Int, name: String, df: DataFrame): DataFrame =
         df.agg(count(lit(1)).as("n_docs"),
             coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens"),
@@ -742,9 +741,8 @@ private[graft] object QueriesCurate {
       // aggregates and the release filter read — so the band join and
       // est-jaccard scoring run once (guide §2.3/§2.4; survivor-count
       // rows × 3 columns, tiny).
-      val s3 = s2.join(drops, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("n_tokens"), col("_eval"))
-        .localCheckpoint(true)
+      val s3 = Materialize(s2.join(drops, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("n_tokens"), col("_eval")))
       val contam = Dedup.decontaminate(docs(s, d), "doc_id", "text", n = 4,
           isEval = col("doc_id") % 25 === 0)
         .filter(col("contaminated") === 1)
@@ -1165,12 +1163,12 @@ private[graft] object QueriesCurate {
       val base = docs(s, d)
       // checkpoint the pair table: it feeds BOTH the fit and the final
       // calibration join — without this the corpus pairing runs twice
-      val pairs = Preference.pairComparisons(
+      val pairs = Materialize(Preference.pairComparisons(
         base.select(col("doc_id"), col("source"),
           TextOps.qualityCols(col("text"), TextOps.tokens(col("text")))
             .last),
         col("doc_id"), col("source"), col("quality_score"),
-        buckets = 64, salt = "bt").coalesce(1).localCheckpoint(true)
+        buckets = 64, salt = "bt").coalesce(1))
       val str = Preference.bradleyTerry(pairs, iters = 3)
         .select(col("item"), col("strength"))
       pairs
@@ -1805,7 +1803,7 @@ private[graft] object QueriesCurate {
   // mean reward, and the winner's margin over the runner-up (NULL for
   // singleton groups — no second candidate to beat). Same factored
   // group/reward definition as d85; one window over the group key.
-  /** d97's ranked candidate frame BEFORE the localCheckpoint — exposed
+  /** d97's ranked candidate frame BEFORE its materialization — exposed
     * so PlanShapeSpec can pin the registered query's own operator shape
     * (one grp hash exchange, window-local sort), not a synthetic
     * stand-in's. */
@@ -1833,7 +1831,7 @@ private[graft] object QueriesCurate {
       // feeds winner, runner-up AND group stats; profiled per the r12
       // rule: sf1 isolated 0.82s with vs 1.39s without (three window
       // recomputes) — the checkpoint wins
-      val ranked = bestOfNRanked(s, d).localCheckpoint(true)
+      val ranked = Materialize(bestOfNRanked(s, d))
       val gs = ranked.groupBy(col("grp")).agg(
         count(lit(1)).as("n_candidates"),
         sum(col("reward")).as("_s"))

@@ -211,21 +211,21 @@ private[graft] object QueriesPipeline {
   // matrix → linear scorer → max-score fallback for dropped users → sort.
   // The oracle composes the already-verified repair CTEs with the trim /
   // pivot / stats / scoring SQL — the whole run.py dataflow in one query.
-  private val pipelineWeights = Map(
+  private[graft] val pipelineWeights = Map(
     "freq_click" -> 0.1, "freq_purchase" -> 0.2,
     "proc_signup" -> 0.001, "proc_view" -> 0.001,
     "td_mean" -> 0.0001, "td_std" -> 0.0001)
 
   /** Spark side of the §3.1 pipeline spine (clean → fused matrix), shared
     * by q27 (linear scorer) and q39 (tree scorer through the same spine). */
-  private def pipelineFeatureMatrix(s: SparkSession, d: String)
+  private[graft] def pipelineFeatureMatrix(s: SparkSession, d: String)
   : (DataFrame, DataFrame) = {
     val e = ev(s, d)
     val in = e.select(col("event_id"), col("user_id"), col("ts"),
       col("event_type"), sval.as("amt"))
     val cleaned = Pipeline.clean(in, "user_id", "event_type", "amt", ord,
       Pipeline.Config(nAmt = 10, nMcc = 10, trimN = 20,
-        dropCodes = Seq("error"))).cache()
+        dropCodes = Seq("error")))
     (Pipeline.featureMatrixFused(cleaned, "user_id", "event_type",
       "amt", TimeFeatures.secondsSinceMidnight(col("ts")), vocab), e)
   }

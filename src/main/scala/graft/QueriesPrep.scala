@@ -270,8 +270,8 @@ private[graft] object QueriesPrep {
     // (target sums, raw sums, per-doc weights) would re-run the corpus
     // explode per branch — the same join-inferred-filter reuse failure
     // PlanShapeSpec caught on d63.
-    val raw = Dsir.bucketCounts(dsirDocs(s, d), "doc_id", "text", DSIR_B)
-      .localCheckpoint(true)
+    val raw = Materialize(
+      Dsir.bucketCounts(dsirDocs(s, d), "doc_id", "text", DSIR_B))
     val tgt = raw.join(
       dsirDocs(s, d).filter(col("lang") === "en")
         .select(col("doc_id").as("doc")),
@@ -350,7 +350,7 @@ private[graft] object QueriesPrep {
   // every gradient is an exact DECIMAL(20,10) sum, so the fit is
   // bit-identical at any parallelism (see Learn scaladoc).
   //
-  // Scale shape: one feature projection (localCheckpoint'd — it feeds
+  // Scale shape: one feature projection (materialized — it feeds
   // 3 gradient passes + the scoring pass), each pass a map-side-
   // combinable aggregation to ONE driver row; scoring is a pure
   // projection with the weights as literals. At 100 TB: fit on a
@@ -459,7 +459,7 @@ private[graft] object QueriesPrep {
     * materialize-once pattern; entries live for the JVM, bounded by
     * the handful of scale dirs a process touches). Keyed by
     * (applicationId, dir), not dir alone: the cached frame is a
-    * localCheckpoint bound to its SparkContext, so an entry from a
+    * materialization bound to its SparkContext, so an entry from a
     * stopped context must NOT be served to a new session in the same
     * JVM (it would fail with "SparkContext has been shut down" instead
     * of re-fitting) — a fresh context gets a fresh applicationId and
@@ -480,23 +480,16 @@ private[graft] object QueriesPrep {
     val appId = s.sparkContext.applicationId
     // Evict entries keyed to stopped contexts: only one SparkContext is
     // live per JVM, so any key with a different applicationId holds a
-    // localCheckpoint'd frame of a dead session — unusable and otherwise
+    // materialized frame of a dead session — unusable and otherwise
     // retained for the JVM lifetime.
     qcModelMemo.keySet.removeIf(k => !k.startsWith(s"$appId:"))
     qcModelMemo.computeIfAbsent(s"$appId:$d",
       _ => new QcCell(() => fitQcModel(s, d))).value
   }
 
-  /** The d95 fit WITHOUT the memo — Bench's cold-fit probe, so the
-    * published decade numbers can show the true first-fit cost beside
-    * the warm serving cost the memoized family rows measure. */
-  private[graft] def qcModelCold(s: SparkSession, d: String)
-      : (DataFrame, Array[Double], Array[(Double, Double)]) =
-    fitQcModel(s, d)
-
   private def fitQcModel(s: SparkSession, d: String)
       : (DataFrame, Array[Double], Array[(Double, Double)]) = {
-    val fx = qcFeatures(s, d).localCheckpoint(true)
+    val fx = Materialize(qcFeatures(s, d))
     val raw = (1 to 4).map(j => col(s"r$j"))
     val stats = Learn.standardStats(fx, raw)
     val xs = lit(1.0) +: raw.zip(stats).map { case (r, (mu, sd)) =>

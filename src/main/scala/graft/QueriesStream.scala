@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize
 import graft.schema.Tables
 import graft.streaming.EventStream
 
@@ -344,14 +345,13 @@ object QueriesStream {
       // transformWithState needs the RocksDB state store provider even in
       // batch (the ephemeral per-task store it spins up); scope the conf
       // to this query via save/restore around an eager materialize — the
-      // q78 pattern (localCheckpoint keeps the result independent of the
+      // q78 pattern (the materialized result is independent of the
       // restored conf).
       val key = "spark.sql.streaming.stateStore.providerClass"
       val prev = s.conf.getOption(key)
       s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
         ".RocksDBStateStoreProvider")
-      try EventStream.rollingFeature(evs, n = 3).toDF()
-        .localCheckpoint(eager = true)
+      try Materialize(EventStream.rollingFeature(evs, n = 3).toDF())
       finally prev match {
         case Some(v) => s.conf.set(key, v)
         case None => s.conf.unset(key)
@@ -414,8 +414,7 @@ object QueriesStream {
       val prev = s.conf.getOption(key)
       s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
         ".RocksDBStateStoreProvider")
-      try EventStream.sftStream(evs, k = 3).toDF()
-        .localCheckpoint(eager = true)
+      try Materialize(EventStream.sftStream(evs, k = 3).toDF())
       finally prev match {
         case Some(v) => s.conf.set(key, v)
         case None => s.conf.unset(key)

@@ -1178,9 +1178,8 @@ private[graft] object QueriesVectors {
       // materialized once: the fit scans it per iteration + the seed
       // read, and the dedup pass scans it twice more (the kmeans-entry
       // discipline, r19)
-      val e = emb(s, d).select(col("vec_id").as("id"),
-        col("embedding").as("vec"))
-        .localCheckpoint(true)
+      val e = Materialize(emb(s, d).select(col("vec_id").as("id"),
+        col("embedding").as("vec")))
       Similarity.semanticDedupKmeans(e, SEM_TAU,
           Similarity.kmeansFit(e, KM_K, KM_ITERS, dims = LSH_DIMS))
         .select(col("id").as("vec_id"), col("cid").cast("long").as("cid"),
@@ -1286,12 +1285,12 @@ private[graft] object QueriesVectors {
           col("embedding").as("vec")),
         KM_K, KM_ITERS, dims = LSH_DIMS)
         .select(col("id").as("vec_id"), col("cid").cast("long").as("cid"))
-      val ct = asg.join(
+      // feeds majority, sizes AND the total
+      val ct = Materialize(asg.join(
           emb(s, d).select(col("vec_id"),
             col("label").cast("long").as("label")), Seq("vec_id"))
         .groupBy(col("cid"), col("label"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // feeds majority, sizes AND the total
+        .agg(count(lit(1)).as("n")))
       val mj = ct.withColumn("_r", row_number().over(
           Window.partitionBy(col("cid"))
             .orderBy(col("n").desc, col("label"))))
@@ -2347,10 +2346,10 @@ private[graft] object QueriesVectors {
     // between them is an exchange, so the codec mapPartitions pass
     // re-executed per consumer (measured r18: two full tower builds
     // inside every scored materialization). The image side is always
-    // the STATIC index (only textDims may stream — s22), so an eager
-    // weak-ref checkpoint materializes the codec once (the s25
-    // corpusTower idiom); tiny: n_img rows × (16 longs + ids).
-    val img = imageTowerFromDims(imgDims, bucketBits).localCheckpoint(true)
+    // the STATIC index (only textDims may stream — s22), so it is
+    // materialized once (the s25 corpusTower idiom); tiny: n_img rows ×
+    // (16 longs + ids).
+    val img = Materialize(imageTowerFromDims(imgDims, bucketBits))
     val hot = img.groupBy(col("ibucket")).count()
       .filter(col("count") > TOWER_MAX_POSTINGS).select(col("ibucket"))
     val imgOk = img.join(hot, Seq("ibucket"), "left_anti")
@@ -2633,11 +2632,10 @@ private[graft] object QueriesVectors {
     // only ids/source/score and the exact integer terms — materializing
     // the 16-element tower vectors through the checkpoint would move
     // ~32 longs per pair for nothing
-    val scored = crossModalScoredDims(towerDims(base), idims,
+    val scored = Materialize(crossModalScoredDims(towerDims(base), idims,
         adaptiveTowerBits(idims.count()))
       .select(col("txt_id"), col("doc_id"), col("source"), col("_score"),
-        col("_dot"), col("_in2"), col("_tn2"))
-      .localCheckpoint(true)
+        col("_dot"), col("_in2"), col("_tn2")))
     val e0 = scored.filter(col("_dot") > 0L
         && col("_dot") * col("_dot") === col("_in2") * col("_tn2")
         && col("txt_id") =!= col("doc_id"))
@@ -2649,9 +2647,8 @@ private[graft] object QueriesVectors {
     // consumer re-derived the idims union scan behind the
     // labelComponents identity join — checkpoint the tiny (node, keep)
     // table once (r18; nodes ≈ 1.25 · corpus, two longs per row)
-    val lab =
-      Dedup.labelComponents(idims.select(col("doc_id").as("doc")), edges)
-        .localCheckpoint(true)
+    val lab = Materialize(
+      Dedup.labelComponents(idims.select(col("doc_id").as("doc")), edges))
     (scored, lab)
   }
 
@@ -2840,12 +2837,9 @@ private[graft] object QueriesVectors {
       .select(col("ibucket").as("cbucket"), col("ivec").as("cvec"),
         col("in2").as("cn2"))
     // the arrival tower feeds BOTH the dup semi-join and the arrivals
-    // count — in batch mode checkpoint it so the codec runs once per
-    // arrival (r18; the streaming twin keeps the lazy form: a streaming
-    // frame cannot checkpoint, and per micro-batch the double pass is
-    // over one batch, not the corpus)
-    val arr0 = imageTowerFromDims(arrDims, bits)
-    val arr = if (arrDims.isStreaming) arr0 else arr0.localCheckpoint(true)
+    // count — materialized so the codec runs once per arrival (r18; the
+    // streaming twin stays lazy)
+    val arr = Materialize(imageTowerFromDims(arrDims, bits))
     val dot = graft.functions.CenteredDotLong(col("ivec"), col("cvec"), 128L)
     val cond = col("ibucket") === col("cbucket") && dot > 0L &&
       dot * dot === col("in2") * col("cn2")
@@ -2905,9 +2899,9 @@ private[graft] object QueriesVectors {
     // gate-width towers (codec runs HERE, once per row; checkpointed so
     // the gate join, the width count, and the serving join all reuse
     // the same materialization)
-    val corpusTower = imageTowerFromDims(cdims, bits0).localCheckpoint(true)
-    val admitted = admittedArrivalTower(arrDims, corpusTower, bits0)
-      .localCheckpoint(true)
+    val corpusTower = Materialize(imageTowerFromDims(cdims, bits0))
+    val admitted = Materialize(
+      admittedArrivalTower(arrDims, corpusTower, bits0))
     val nAdmitted = admitted.count()
     val bits1 = adaptiveTowerBits(nBefore + nAdmitted)
     // re-bucket the SAME vectors at the new width — a stateless map

@@ -17,7 +17,6 @@ object Verify {
       case None => SparkEntry.queries
     }
     selected.foreach { case (name, fn) =>
-      spark.catalog.clearCache()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -145,8 +145,7 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int, threshold: Double, maxPostings: Int = 0)
   : DataFrame = {
-    val sh = docShingles(df, idCol, textCol, n, maxPostings)
-      .localCheckpoint(true)
+    val sh = Materialize(docShingles(df, idCol, textCol, n, maxPostings))
     val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("n_sh"))
     val inter = sh.select(col("doc").as("a"), col("s"))
       .join(sh.select(col("doc").as("b"), col("s")), Seq("s"))
@@ -214,9 +213,8 @@ object Dedup {
     // project-collapse barrier as minhashLsh); shingle-less docs carry a
     // null signature — they can't be candidates but must still appear in
     // the output, which the final left join restores
-    val sigs = df.select(col(idCol).as("doc"), isEval.as("_eval"),
-        arr.as("_sig"))
-      .localCheckpoint(true)
+    val sigs = Materialize(df.select(col(idCol).as("doc"),
+        isEval.as("_eval"), arr.as("_sig")))
       .filter(col("_sig").isNotNull)
       .select(col("doc") +: col("_eval") +: (0 until k).map(j =>
         element_at(col("_sig"), j + 1).as(s"sig$j")): _*)
@@ -263,9 +261,8 @@ object Dedup {
   : DataFrame = {
     // occurrences feed both the df table and the join probe — materialize
     // once (same policy as jaccardPairs)
-    val occ = df.select(col(idCol).as("doc"),
-      explode(TextOps.shingles(TextOps.tokens(col(textCol)), n)).as("s"))
-      .localCheckpoint(true)
+    val occ = Materialize(df.select(col(idCol).as("doc"),
+      explode(TextOps.shingles(TextOps.tokens(col(textCol)), n)).as("s")))
     val docFreq = occ.distinct()
       .groupBy(col("s")).agg(count(lit(1)).as("df"))
     val per = occ.join(docFreq, Seq("s"))
@@ -297,8 +294,8 @@ object Dedup {
     * array_sort, never by a global sort. */
   def stripBoilerplate(df: DataFrame, idCol: String, textCol: String,
                        n: Int, maxDf: Int): DataFrame = {
-    val toks = df.select(col(idCol).as("doc"),
-      TextOps.tokens(col(textCol)).as("w")).localCheckpoint(true)
+    val toks = Materialize(df.select(col(idCol).as("doc"),
+      TextOps.tokens(col(textCol)).as("w")))
     val sh = toks.select(col("doc"),
       posexplode(TextOps.shingles(col("w"), n)).as(Seq("spos", "s")))
     val hot = sh.select(col("doc"), col("s")).distinct()
@@ -320,11 +317,10 @@ object Dedup {
     // hot-set join; the survivor anti-join AND the removed-count both
     // consume it — checkpoint so that pipeline runs once (d44
     // 21.2 -> 10.3 CPU-s, d102 17.0 -> 14.4 at sf0.1)
-    val covered = cutStarts
+    val covered = Materialize(cutStarts
       .select(col("doc"),
         explode(sequence(col("spos"), col("spos") + n - 1)).as("pos"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val tok = toks.select(col("doc"), posexplode(col("w")).as(Seq("pos", "t")))
     val rebuilt = tok.join(covered, Seq("doc", "pos"), "left_anti")
       .groupBy(col("doc"))
@@ -368,8 +364,8 @@ object Dedup {
   def exciseDupSpans(df: DataFrame, idCol: String, textCol: String,
                      k: Int, posCap: Long = 1000000L): DataFrame = {
     require(posCap > 0, "exciseDupSpans: posCap must be positive")
-    val toks = df.select(col(idCol).as("doc"),
-      TextOps.tokens(col(textCol)).as("w")).localCheckpoint(true)
+    val toks = Materialize(df.select(col(idCol).as("doc"),
+      TextOps.tokens(col(textCol)).as("w")))
     val gr = toks.select(col("doc"),
       posexplode(TextOps.shingles(col("w"), k)).as(Seq("spos", "g")))
       .filter(assert_true(col("spos") < posCap, concat(
@@ -421,18 +417,18 @@ object Dedup {
     * exchanges with partition-local sorts, never a global one. */
   def maxDupSpans(df: DataFrame, idCol: String, textCol: String, k: Int)
   : DataFrame = {
-    val toks = df.select(col(idCol).as("doc"),
-      TextOps.tokens(col(textCol)).as("w")).localCheckpoint(true)
+    val toks = Materialize(df.select(col(idCol).as("doc"),
+      TextOps.tokens(col(textCol)).as("w")))
     val gr = toks.select(col("doc"),
       posexplode(TextOps.shingles(col("w"), k)).as(Seq("spos", "g")))
     val dupG = gr.groupBy(col("g")).agg(count(lit(1)).as("_occ"))
       .filter(col("_occ") >= 2).select(col("g"))
     // consumed by the cover AND the per-doc window count
-    val dup = gr.join(dupG, Seq("g")).localCheckpoint(true)
+    val dup = Materialize(gr.join(dupG, Seq("g")))
     // consumed by islands, the survivor anti-join and the junction probe
-    val covered = dup.select(col("doc"),
+    val covered = Materialize(dup.select(col("doc"),
         explode(sequence(col("spos"), col("spos") + k - 1)).as("pos"))
-      .distinct().localCheckpoint(true)
+      .distinct())
     val wDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc")).orderBy(col("pos"))
     val spans = covered
@@ -482,10 +478,8 @@ object Dedup {
                    threshold: Double, maxPostings: Int = 0): DataFrame = {
     // consumed by three branches (sizes + both join sides) — materialize
     // once, or the tokenize/shingle/distinct pipeline re-executes per
-    // branch. Weak-ref checkpoint, not cache: a returned .cache() pins the
-    // shingle table in the CacheManager until someone calls clearCache
-    val sh = docShingles(df, idCol, textCol, n, maxPostings)
-      .localCheckpoint(true)
+    // branch
+    val sh = Materialize(docShingles(df, idCol, textCol, n, maxPostings))
     val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("n_sh"))
     val l = sh.select(col("doc").as("a"), col("s"))
     val r = sh.select(col("doc").as("b"), col("s"))
@@ -581,16 +575,14 @@ object Dedup {
         // barrier each transform reads a plain attribute. array_min of
         // an empty doc is null -> whole-array null via the guard,
         // matching the native expression's null-for-empty contract.
-        df.select(col(idCol).as("doc"), shArr.as("_sh"))
-          .localCheckpoint(true)
+        Materialize(df.select(col(idCol).as("doc"), shArr.as("_sh")))
           .select(col("doc"),
             when(size(col("_sh")) === 0, lit(null)).otherwise(
               array((0 until k).map(j => array_min(
                 transform(col("_sh"), x => hashFamily(x, lit(j))))): _*))
               .as("_sig"))
       }
-    sigArrDf
-      .localCheckpoint(true)
+    Materialize(sigArrDf)
       .filter(col("_sig").isNotNull)
       .select(col("doc") +: (0 until k).map(j =>
         element_at(col("_sig"), j + 1).as(s"sig$j")): _*)
@@ -620,15 +612,13 @@ object Dedup {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     // one wide row per doc — tiny vs the corpus; materialized because the
     // band join and both scoring sides reuse it (else k*|shingles| md5s
-    // rerun 3x). Weak-ref checkpoint over cache for the same
-    // no-CacheManager-pinning reason as jaccardPairs
+    // rerun 3x)
     val sigs = (if (maxPostings == 0) {
       minhashWideSigs(df, idCol, textCol, n, k, hashFamily)
     } else {
       val fam = if (hashFamily == null) md5Hash _ else hashFamily
-      minhashSignatures(docShingles(df, idCol, textCol, n, maxPostings),
-        k, fam)
-        .localCheckpoint(true)
+      Materialize(minhashSignatures(
+        docShingles(df, idCol, textCol, n, maxPostings), k, fam))
     })
     minhashLshFromSigs(sigs, k, bands, maxBandPostings)
   }
@@ -882,20 +872,18 @@ object Dedup {
     // both pair lists appear TWICE in the edge union (the mirror) — and
     // a union's branches do not share subtrees, so lazily the exact
     // md5-group pass and the LSH band-join + signature scoring each ran
-    // twice inside the edge-cache build. Pair-list-sized checkpoints
+    // twice inside the edge build. Pair-list-sized checkpoints
     // (r19: d34 38.7 -> 17.8 CPU-s, d10 26.6 -> 11.8 at sf0.1).
     val exactPairs = {
       val g = exact(df, idCol, md5(col(textCol)))
-      df.select(col(idCol).as("doc"), md5(col(textCol)).as("fp"))
+      Materialize(df.select(col(idCol).as("doc"), md5(col(textCol)).as("fp"))
         .join(g.select(col("fp"), col("keep_id")), Seq("fp"))
         .select(col("doc"), col("keep_id").as("peer"))
-        .filter(col("doc") =!= col("peer"))
-        .localCheckpoint(true)
+        .filter(col("doc") =!= col("peer")))
     }
-    val nearPairs = minhashLsh(df, idCol, textCol, n, k, bands)
+    val nearPairs = Materialize(minhashLsh(df, idCol, textCol, n, k, bands)
       .filter(col("est_jaccard") >= minEstJaccard)
-      .select(col("a").as("doc"), col("b").as("peer"))
-      .localCheckpoint(true)
+      .select(col("a").as("doc"), col("b").as("peer")))
     val edges = exactPairs.unionByName(nearPairs)
       .unionByName(exactPairs.select(col("peer").as("doc"),
         col("doc").as("peer")))
@@ -913,39 +901,21 @@ object Dedup {
     * identity rows for nodes touching no edge. */
   def labelComponents(nodes: DataFrame, edges0: DataFrame,
                       maxRounds: Int = 10): DataFrame = {
-    val edges = edges0.distinct().cache()
-    // FAULT-TOLERANCE TRADE (cluster runs): localCheckpoint truncates
-    // lineage into executor-local blocks — losing an executor
-    // mid-propagation makes that round's blocks unrecoverable and fails
-    // the job, where the old cache()-based rounds could recompute from
-    // lineage. Single-node (this harness) there is no such failure
-    // mode, so localCheckpoint's zero-copy materialization is the
-    // default; a cluster run sets spark.sparkContext.setCheckpointDir
-    // and each round then writes a RELIABLE checkpoint instead
-    // (HDFS/object-store backed, survives executor loss) at the cost
-    // of one distributed write per round.
-    val spark = nodes.sparkSession
-    def trunc(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
+    val edges = Materialize(edges0.distinct())
     // label propagation to fixpoint (bounded): label = min id reachable.
     // The first hop is folded into initialization: against the identity
     // label map it reduces to min(id, min(peer)) straight off the edge
     // list, and its convergence check could never pass (any edge lowers
     // some label) — so don't pay a checked round for it. The groupBy's
     // key set IS the active set, so no join against the corpus here.
-    // each round's label table is localCheckpoint(eager)'d, NOT cache()'d:
-    // a cache truncates only the PHYSICAL plan — the logical lineage keeps
-    // compounding, and with the doubling join referencing `labels` several
-    // times per round the logical tree grows ~4x per round, so Catalyst
-    // re-canonicalizes an exponentially growing plan on every convergence
-    // count (measured: the 10x fixture drove the c08 driver into minutes
-    // of pure plan canonicalization before any executor work). The
-    // checkpoint truncates the LOGICAL plan to a scan of the materialized
-    // blocks — planning cost is constant per round at any scale. Blocks
-    // are weakly referenced; the ContextCleaner reclaims each round's
-    // table once the next round's plan no longer reaches it.
-    var labels: DataFrame = trunc(edges.groupBy(col("doc"))
+    // each round's label table is materialized: with the doubling join
+    // referencing `labels` several times per round, an untruncated
+    // logical tree grows ~4x per round, and Catalyst re-canonicalizes it
+    // on every convergence count (measured with a cache(), which keeps
+    // the logical lineage: the 10x fixture drove the c08 driver into
+    // minutes of pure plan canonicalization before any executor work).
+    // Truncated, planning cost is constant per round at any scale.
+    var labels: DataFrame = Materialize(edges.groupBy(col("doc"))
       .agg(min(col("peer")).as("_p"))
       .select(col("doc"), least(col("doc"), col("_p")).as("label")))
     var round = 0
@@ -976,7 +946,7 @@ object Dedup {
       // the convergence check rides the same materialization as the new
       // label table (the _old column is dropped before the next round) —
       // no second join job against the previous round
-      val next = trunc(hopped
+      val next = Materialize(hopped
         .groupBy(col("doc")).agg(min(col("label")).as("label"))
         .join(labels.select(col("doc"), col("label").as("_old")), Seq("doc")))
       val changed = next.filter(col("label") =!= col("_old")).limit(1).count()
@@ -984,17 +954,12 @@ object Dedup {
       converged = changed == 0
       round += 1
     }
-    edges.unpersist(blocking = false)
     if (!converged)
       throw new IllegalStateException(
         s"labelComponents: label propagation did not converge in $maxRounds " +
           "rounds — raise maxRounds (pointer doubling needs " +
           "O(log component-diameter) rounds)")
-    // re-attach the passive majority as identity rows; `labels` is
-    // already a projection over the last round's weakly-referenced
-    // checkpoint, so the ContextCleaner can reclaim the round tables
-    // once the result plan is unreachable (a returned .cache() would pin
-    // them in the CacheManager forever)
+    // re-attach the passive majority as identity rows
     nodes.select(col("doc"))
       .join(labels, Seq("doc"), "left")
       .select(col("doc"),
@@ -1037,10 +1002,9 @@ object Dedup {
     val mask = (1L << segBits) - 1
     // both band sides consume the signature table — materialize it once,
     // or the upstream simhash aggregation (`bits` conditional sums over
-    // the token explode) runs twice. Weakly-referenced checkpoint, not
-    // cache: reclaimed when the result plan becomes unreachable, and the
-    // table is narrow (id + one long) so the storage cost is trivial.
-    val hs = hashes.localCheckpoint(true)
+    // the token explode) runs twice. The table is narrow (id + one
+    // long), so the storage cost is trivial.
+    val hs = Materialize(hashes)
     def banded(idAs: String, hashAs: String): DataFrame =
       hs.select(col("doc").as(idAs), col("simhash").as(hashAs),
         explode(array((0 until segs).map(i =>

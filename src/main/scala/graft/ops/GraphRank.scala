@@ -11,7 +11,7 @@ import graft.ops.CrossRound.round // shadows functions.round: cross-engine form
  * Scale shape: the canonical distributed PageRank — each iteration is ONE
  * equi-join of the edge list with the current rank vector (shuffle on the
  * node key) plus one aggregation that reuses the same distribution. Edges
- * and degrees materialize once (weak-ref checkpoint); rank state is
+ * and degrees materialize once ([[Materialize]]); rank state is
  * node-count-sized, never edge-sized. No driver-side state beyond the loop
  * counter, so 1000 executors iterate a trillion-edge list the same way.
  *
@@ -43,16 +43,13 @@ object GraphRank {
     // distinct edges feed every iteration — materialize ONCE with the
     // out-degree already attached (the degree join would otherwise
     // re-shuffle the full edge list every round).
-    // ContextCleaner reclaims the weak-ref checkpoints.
     val raw = edges0.select(col("src"), col("dst"))
     val distinctEdges = if (assumeDistinct) raw else raw.distinct()
     val outdeg = distinctEdges.groupBy(col("src"))
       .agg(count(lit(1)).as("_deg"))
-    val edges = distinctEdges.join(outdeg, Seq("src"))
-      .localCheckpoint(true)
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
+    val edges = Materialize(distinctEdges.join(outdeg, Seq("src")))
+    val nodes = Materialize(edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct())
     val dampDec = lit(damping).cast("decimal(3,2)")
     val baseDec = lit(1).cast("decimal(3,2)") - dampDec
     var ranks = nodes.select(col("node"), lit(1.0).as("rank"))

@@ -181,15 +181,15 @@ object Preference {
     // join and aggregation stays a single-task stage instead of paying
     // 3 × several 32-partition shuffles of 20-row tables; the corpus
     // never enters the loop.
-    val p = pairs.select(col("i"), col("j"), col("n"), col("wins_i"))
-      .coalesce(1).localCheckpoint(true)
-    val stats = p.select(col("i").as("item"), col("n"),
+    val p = Materialize(pairs.select(col("i"), col("j"), col("n"),
+      col("wins_i")).coalesce(1))
+    val stats = Materialize(p.select(col("i").as("item"), col("n"),
         col("wins_i").as("_w"))
       .union(p.select(col("j").as("item"), col("n"),
         (col("n") - col("wins_i")).as("_w")))
       .groupBy(col("item"))
       .agg(sum(col("n")).as("n_games"), sum(col("_w")).as("n_wins"))
-      .coalesce(1).localCheckpoint(true)
+      .coalesce(1))
     var str = stats.select(col("item"), lit(1.0).as("s"))
     for (it <- 0 until iters) {
       val withS = p
@@ -220,7 +220,7 @@ object Preference {
       // strengths are exact materialized rows (already rounded to 6 dp),
       // so the checkpointed values are bit-identical to the lazy form;
       // the final round stays lazy for the caller's one action.
-      if (it < iters - 1) str = str.coalesce(1).localCheckpoint(true)
+      if (it < iters - 1) str = Materialize(str.coalesce(1))
     }
     stats.join(str, Seq("item"))
       .select(col("item"), col("n_games"), col("n_wins"),

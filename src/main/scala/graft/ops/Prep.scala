@@ -39,9 +39,8 @@ object Prep {
     // then differ and exchange reuse fails, silently re-scanning and
     // re-shuffling the whole corpus for the prior (caught by
     // PlanShapeSpec's d63 exchange count).
-    val byFold = samples.groupBy("category", "fold")
-      .agg(count(lit(1)).as("n"), sum("y").as("pos"))
-      .localCheckpoint(true)
+    val byFold = Materialize(samples.groupBy("category", "fold")
+      .agg(count(lit(1)).as("n"), sum("y").as("pos")))
     val byCat = byFold.groupBy("category")
       .agg(sum("n").as("tn"), sum("pos").as("tp"))
     val global = byFold.agg(sum("n").as("gn"), sum("pos").as("gp"))
@@ -71,8 +70,7 @@ object Prep {
     // distinct-ts-sized, but its subtree is the corpus count pass and
     // BOTH the cumsum and the total consume it — checkpoint so the
     // events scan+aggregate runs once (d64: 22.8 -> 7.0 CPU-s at sf0.1)
-    val tc = df.groupBy(tsCol).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+    val tc = Materialize(df.groupBy(tsCol).agg(count(lit(1)).as("cnt")))
     val cum = Sequences.globalCumsum(tc, tsCol, col("cnt"), "cum")
     val total = tc.agg(sum("cnt").as("n"))
     val split = bounds.foldRight(lit(last)) { case ((frac, name), acc) =>
@@ -245,12 +243,11 @@ object Prep {
     // steps+1 rows, but its SUBTREE is the corpus scoring pass — and the
     // total + the triangle join each consume it, so lazily the corpus was
     // scanned and scored twice (d87: 21.6 CPU-s at sf0.1, 5.0 after).
-    // Weak-ref checkpoint of a ~21-row histogram is always the right trade.
-    val hist = df.select(scoreMicro.cast("long").as("_sm"),
+    // Materializing a ~21-row histogram is always the right trade.
+    val hist = Materialize(df.select(scoreMicro.cast("long").as("_sm"),
         label.cast("long").as("_y"))
       .groupBy(floor(col("_sm") / lit(stepW)).cast("long").as("_bucket"))
-      .agg(count(lit(1)).as("_n"), sum(col("_y")).as("_pos"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("_n"), sum(col("_y")).as("_pos")))
     val tot = hist.agg(sum(col("_pos")).as("_tp_all"))
     val ks = df.sparkSession.range(0, steps + 1).select(col("id").as("_k"))
     ks.join(broadcast(hist), col("_bucket") >= col("_k"), "left")
@@ -315,14 +312,13 @@ object Prep {
                inA: Column, inB: Column, buckets: Int): DataFrame = {
     val c = df.select(grp.as("grp"), bucket.cast("long").as("bucket"),
       inA.cast("long").as("_ia"), inB.cast("long").as("_ib"))
-    // grid-sized and read twice (spine + join) — localCheckpoint so the
+    // grid-sized and read twice (spine + join) — materialized so the
     // spine's distinct does NOT re-run the corpus aggregation (and the
     // corpus is scanned exactly once more than the A/B union needs;
     // PlanShapeSpec pins the scan count). Profiled per the r12 rule:
     // sf1 isolated 1.45s with vs 1.69s without — the checkpoint wins.
-    val counts = c.groupBy(col("grp"), col("bucket"))
-      .agg(sum(col("_ia")).as("n_a"), sum(col("_ib")).as("n_b"))
-      .localCheckpoint(true)
+    val counts = Materialize(c.groupBy(col("grp"), col("bucket"))
+      .agg(sum(col("_ia")).as("n_a"), sum(col("_ib")).as("n_b")))
     val spine = counts.select(col("grp")).distinct()
       .select(col("grp"),
         explode(sequence(lit(0L), lit(buckets - 1L))).as("bucket"))

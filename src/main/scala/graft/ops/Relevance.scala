@@ -85,8 +85,8 @@ object Relevance {
     // consumed by the tf pipeline AND the corpus-stats aggregate —
     // materialize once so the corpus isn't tokenized twice (the
     // jaccardPairs/minhashLsh multi-consumer policy)
-    val toks = df.select(col(idCol).as("doc"),
-      TextOps.tokens(col(textCol)).as("_w")).localCheckpoint(true)
+    val toks = Materialize(df.select(col(idCol).as("doc"),
+      TextOps.tokens(col(textCol)).as("_w")))
     val tf = toks
       .select(col("doc"), size(col("_w")).cast("double").as("_dl"),
         explode(col("_w")).as("term"))
@@ -219,14 +219,13 @@ object Relevance {
       .groupBy(col("doc"), col("s")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("s")).agg(count(lit(1)).as("_df"))
     // weighted postings feed four branches (norms, both candidate sides,
-    // both dot sides) — weak-ref checkpoint so the tokenize/shingle/agg
-    // pipeline runs once and the ContextCleaner can still reclaim it
-    val w = tf.join(dfreq, Seq("s"))
+    // both dot sides) — materialized so the tokenize/shingle/agg
+    // pipeline runs once
+    val w = Materialize(tf.join(dfreq, Seq("s"))
       .crossJoin(broadcast(nDocs))
       .withColumn("w", col("tf").cast("double") *
         (log((col("_nd") + 1.0) / (col("_df").cast("double") + 1.0)) + 1.0))
-      .select(col("doc"), col("s"), col("_df"), col("w"))
-      .localCheckpoint(true)
+      .select(col("doc"), col("s"), col("_df"), col("w")))
     val norms = w.groupBy(col("doc"))
       .agg(round(sqrt(sum(col("w") * col("w"))), 9).as("nrm"))
     // candidate rule = BOTH knobs: pairs must share >= minShared distinct

@@ -180,9 +180,8 @@ object Repair {
     // percentile subtree per consumer (the r18 q27 dump shows two
     // complete aggregate towers over two parquet scans, zero
     // ReusedExchange). (user, code)-count-sized, four numerics per row —
-    // the d78/d80 discipline; weak-ref, rebuilt on every invocation.
-    val bounds = groupBounds(df, user, code, amt, nAmt, exact)
-      .localCheckpoint(true)
+    // the d78/d80 discipline.
+    val bounds = Materialize(groupBounds(df, user, code, amt, nAmt, exact))
     val modals = modal(bounds, user, code)
     val passthrough = df.columns.filterNot(c => c == code || c == amt).map(col).toSeq
     df.join(bounds, Seq(user, code), "left")

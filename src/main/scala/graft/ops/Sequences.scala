@@ -80,10 +80,9 @@ object Sequences {
                    outCol: String, partitions: Int = 32): DataFrame = {
     // freeze the pid assignment: the offsets table and the re-join must
     // see the SAME partitioning of the same rows
-    val parts = df
+    val parts = Materialize(df
       .repartitionByRange(partitions, col(orderCol))
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("_pid", spark_partition_id()))
     val offs = parts.groupBy(col("_pid")).agg(sum(valueCol).as("_ps"))
       .withColumn("_off", coalesce(
         sum(col("_ps")).over(Window.orderBy(col("_pid"))

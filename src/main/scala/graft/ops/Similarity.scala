@@ -147,7 +147,7 @@ object Similarity {
     * surface): the corpus-side centroid assignment is probe-independent,
     * so running ivfKnn once per level re-derived it each time (measured
     * r18: 3 identical corpus crossJoin×centroids + window passes). Here
-    * it materializes once (weak-ref checkpoint) and the query side is
+    * it materializes once ([[Materialize]]) and the query side is
     * assigned once at keep = max(probes); level p is then the `_r <= p`
     * prefix — identical rows to `ivfKnn(..., nProbe = p)` for every p
     * (assignment ranks on rounded similarity with centroid-id tiebreak,
@@ -171,10 +171,10 @@ object Similarity {
       scored.withColumn("_r", row_number().over(w)).filter(col("_r") <= keep)
         .select(col(idAs), col(vecAs), col(normAs), col("cid"), col("_r"))
     }
-    val corpusBuckets = assign(corpus, "nid", "nv", "_nn", keep = 1)
-      .drop("_r").localCheckpoint(true)
-    val queryProbes = assign(queries, "qid", "qv", "_qn", keep = probes.max)
-      .localCheckpoint(true)
+    val corpusBuckets = Materialize(
+      assign(corpus, "nid", "nv", "_nn", keep = 1).drop("_r"))
+    val queryProbes = Materialize(
+      assign(queries, "qid", "qv", "_qn", keep = probes.max))
     probes.map { p =>
       val cand = queryProbes.filter(col("_r") <= p).drop("_r")
         .join(corpusBuckets, Seq("cid"))
@@ -296,16 +296,10 @@ object Similarity {
       .orderBy(col("_cs").desc, col("cid").asc)
     // consumed by three branches (both pair-join sides + the final keep
     // join) — materialize once, or the centroid-assignment pass re-executes
-    // per branch. localCheckpoint (not cache): the checkpoint RDD is held by
-    // weak reference, so the ContextCleaner reclaims the storage when this
-    // plan becomes unreachable — a .cache() here would pin a corpus-sized
-    // DataFrame in the CacheManager until someone calls clearCache (long-
-    // lived sessions leaked it). Trade-off: checkpointed partitions are not
-    // recomputable on executor loss; acceptable for a bounded dedup pass.
-    val asg = scored.withColumn("_r", row_number().over(w))
+    // per branch
+    val asg = Materialize(scored.withColumn("_r", row_number().over(w))
       .filter(col("_r") === 1)
-      .select(col("id"), col("vec"), col("_vn"), col("cid"))
-      .localCheckpoint(true)
+      .select(col("id"), col("vec"), col("_vn"), col("cid")))
     dropWithinBuckets(asg, threshold)
   }
 
@@ -318,10 +312,9 @@ object Similarity {
   def semanticDedupKmeans(corpus: DataFrame, threshold: Double,
                           cents: Array[Array[Double]]): DataFrame =
     dropWithinBuckets(
-      assignStruct(corpus, cents)
+      Materialize(assignStruct(corpus, cents)
         .select(col("id"), col("vec"), sqrt(col("_vn2")).as("_vn"),
-          col("_x.cid").as("cid"))
-        .localCheckpoint(true),
+          col("_x.cid").as("cid"))),
       threshold)
 
   /** The shared drop rule: within each bucket, a vector is dropped when an
@@ -778,10 +771,10 @@ object Similarity {
     * discipline): kmeansFit scans it per iteration plus the seed read,
     * and the final assignment scans it again — lazily every pass
     * re-decoded the embeddings parquet (r19: e18 23.6 → 8.9 CPU-s,
-    * e25 17.0 → 8.9 at sf0.1). Weak-ref blocks, spilled to disk by the
-    * BlockManager when the corpus outgrows storage memory. */
+    * e25 17.0 → 8.9 at sf0.1). Its O(corpus) footprint is recorded in
+    * [[Materialize]]. */
   def kmeans(corpus: DataFrame, k: Int, iters: Int, dims: Int): DataFrame = {
-    val c = corpus.localCheckpoint(true)
+    val c = Materialize(corpus)
     assignToCentroids(c, kmeansFit(c, k, iters, dims))
   }
 
@@ -899,8 +892,8 @@ object Similarity {
     // un-truncated lineage compounds ~3^k copies of the pool plan (the
     // Subword.learnMerges lesson); checkpointed, each step is one small
     // job over ≤ |queries|·k rows
-    val p = pool.select(col("qid"), col("nid"), col("rel"), col("nv"))
-      .localCheckpoint(true)
+    val p = Materialize(
+      pool.select(col("qid"), col("nid"), col("rel"), col("nv")))
     def pick(cands: DataFrame, step: Int): DataFrame = {
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("nid").asc)
@@ -921,7 +914,7 @@ object Similarity {
       val next = pick(rem.join(ms, Seq("qid", "nid"))
         .withColumn("score", round(lit(lam) * col("rel")
           - lit(oneMinusLam) * col("ms"), 6)), t)
-      selected = selected.unionByName(next).localCheckpoint(true)
+      selected = Materialize(selected.unionByName(next))
     }
     selected.select(col("qid"), col("nid"), col("step"), col("score"))
   }

@@ -112,16 +112,15 @@ object Subword {
   def learnMerges(words: DataFrame, wordCol: String, cntCol: String,
                   nMerges: Int, passes: Int = 6): DataFrame = {
     require(nMerges > 0 && passes > 0, "subword: nMerges and passes")
-    var it = words.select(
+    var it = Materialize(words.select(
         concat(lit("·"), regexp_replace(col(wordCol), "(.)", "$1·"))
           .as("enc"),
-        col(cntCol).cast("long").as("cnt"))
-      .localCheckpoint(true)
+        col(cntCol).cast("long").as("cnt")))
     val learned = (1 to nMerges).map { rank =>
       val u = split(trim(col("enc"), "·"), "·")
       // words of one unit carry no pairs; the filter also keeps the
       // sequence() bounds ascending (sequence(1, 0) would count DOWN)
-      val top = it.filter(size(u) >= 2)
+      val top = Materialize(it.filter(size(u) >= 2)
         .select(col("cnt"), u.as("u"),
           explode(sequence(lit(1), size(u) - 1)).as("i"))
         .select(element_at(col("u"), col("i")).as("x"),
@@ -130,15 +129,13 @@ object Subword {
         .groupBy(col("x"), col("y")).agg(sum(col("cnt")).as("cnt"))
         .orderBy(col("cnt").desc, col("x"), col("y")).limit(1)
         .select(lit(rank.toLong).as("rank"), col("x"), col("y"),
-          concat(col("x"), col("y")).as("merged"), col("cnt"))
-        .localCheckpoint(true)
+          concat(col("x"), col("y")).as("merged"), col("cnt")))
       val pat = concat(lit("·"), col("x"), lit("·"), col("y"), lit("·"))
       val rep = concat(lit("·"), col("merged"), lit("·"))
-      it = it.crossJoin(
+      it = Materialize(it.crossJoin(
           broadcast(top.select(col("x"), col("y"), col("merged"))))
         .select((1 to passes).foldLeft(col("enc"))((c, _) =>
-          replace(c, pat, rep)).as("enc"), col("cnt"))
-        .localCheckpoint(true)
+          replace(c, pat, rep)).as("enc"), col("cnt")))
       top
     }
     learned.reduce(_.unionByName(_))

@@ -365,9 +365,8 @@ object TextOps {
     // output-sized, and BOTH the df aggregate and the final join consume
     // it — checkpoint so the corpus explode+count runs once (d21:
     // 15.8 -> 3.8 CPU-s at sf0.1)
-    val tf = terms.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf = Materialize(terms.groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df_count"))
     val nDocs = docsDf.agg(count(lit(1)).cast("double").as("_n"))
     tf.join(dfreq, Seq("term"))

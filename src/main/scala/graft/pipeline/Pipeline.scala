@@ -11,11 +11,11 @@ import graft.ops._
  * (J3/J4/U1) → ordered sink (O1).
  *
  * Where the reference writes the cleaned table to CSV and re-reads it twice
- * (`run.py:84-90`, operator S3), `clean` returns a cacheable DataFrame — one
- * `.cache()` call replaces the disk round-trip and both downstream branches
- * share the scan. Everything stays one lazy Catalyst plan per sink; all
- * per-user stages are co-partitioned on the user key, so the exchange
- * introduced by the first groupBy is reused by every later join/window.
+ * (`run.py:84-90`, operator S3), [[submission]] materializes the one frame
+ * that several consumers read, the scored users ([[Materialize]]); the
+ * stages below it run once, as one lazy Catalyst plan. All per-user stages
+ * are co-partitioned on the user key, so the exchange introduced by the
+ * first groupBy is reused by every later join/window.
  */
 object Pipeline {
 
@@ -83,7 +83,9 @@ object Pipeline {
     * cleaning re-enter with the maximum score (`run.py:480-486`). */
   def submission(features: DataFrame, scorer: Scorer, allUsers: DataFrame,
                  user: String): DataFrame = {
-    val scored = scorer.score(features).select(col(user), col("target"))
+    // read three times: the result, the left-anti join and the max score
+    val scored = Materialize(
+      scorer.score(features).select(col(user), col("target")))
     val vanished = allUsers.select(col(user)).distinct()
       .join(scored.select(col(user)), Seq(user), "left_anti")
     val fallback = vanished.crossJoin(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.GBTRegressor
+import graft.ops.Materialize
 
 /**
  * §3.3 training lifecycle — the engine analog of the reference's CatBoost
@@ -131,19 +132,18 @@ object Training {
     * scores the held-out fold with the BRIDGED model (so what CV measures
     * is exactly what serving runs). Input must carry foldCol; returns
     * (foldCol, idCol, labelCol, target) for all rows — feed to
-    * [[rankSumAuc]] grouped by fold for the notebook's `test-AUC` table. */
+    * [[rankSumAuc]] grouped by fold for the notebook's `test-AUC` table.
+    * The matrix is materialized once, and backs both the k fits and the
+    * returned held-out scores. */
   def cvScores(matrix: DataFrame, featureNames: Seq[String], idCol: String,
                labelCol: String, foldCol: String, k: Int,
                iterations: Int): DataFrame = {
-    val cached = matrix.cache()
-    try {
-      val perFold = (0 until k).map { f =>
-        val m = fitGbt(cached.filter(col(foldCol) =!= f), featureNames,
-          labelCol, iterations)
-        TreeEnsembleScorer(m).score(cached.filter(col(foldCol) === f))
-          .select(col(foldCol), col(idCol), col(labelCol), col("target"))
-      }
-      perFold.reduce(_ unionAll _)
-    } finally { cached.unpersist(); () }
+    val mat = Materialize(matrix)
+    (0 until k).map { f =>
+      val m = fitGbt(mat.filter(col(foldCol) =!= f), featureNames,
+        labelCol, iterations)
+      TreeEnsembleScorer(m).score(mat.filter(col(foldCol) === f))
+        .select(col(foldCol), col(idCol), col(labelCol), col("target"))
+    }.reduce(_ unionAll _)
   }
 }

@@ -365,10 +365,15 @@ class PlanShapeSpec extends SparkSpec {
     // histogram sketch and the native-MinHash signature pass must all
     // compile into WholeStageCodegen spans — a non-codegen Expression or
     // a lambda-bearing operator in the hot path would drop the plan back
-    // to interpreted row-at-a-time evaluation
-    for (q <- Seq("q27_pipeline_submission", "q44_hist_quantile",
-        "d06_minhash_lsh")) {
-      val df = SparkEntry.queries(q)(spark, sf)
+    // to interpreted row-at-a-time evaluation. q27 materializes its
+    // scored frame, so its final plan starts at that scan: the spine
+    // below it (fused features → linear scorer) is probed on its own.
+    val spine = graft.pipeline.LinearScorer(QueriesPipeline.pipelineWeights)
+      .score(QueriesPipeline.pipelineFeatureMatrix(spark, sf)._1)
+    val probes = ("q27 spine" -> spine) +:
+      Seq("q27_pipeline_submission", "q44_hist_quantile", "d06_minhash_lsh")
+        .map(q => q -> SparkEntry.queries(q)(spark, sf))
+    for ((q, df) <- probes) {
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       // AQE-final plans print codegen stages as the "*(id) " node prefix
